@@ -50,10 +50,6 @@ BENCH_QUERIES = [
     "events_sliding_windows",
 ]
 
-# Every other registered query is benched too (after the headline set), so a
-# regression anywhere in the surface is visible round over round.
-BENCH_ALL_REGISTERED = True
-
 # Per-query timing = MEDIAN of 3 runs: the first run eats plan compilation /
 # codegen / cache warmup, a single best-of can still catch a lucky OS-cache
 # hit — the median is the noise-robust round-over-round number.
@@ -165,9 +161,9 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    names = list(BENCH_QUERIES)
-    if BENCH_ALL_REGISTERED:
-        names += sorted(set(registry.QUERIES) - set(BENCH_QUERIES))
+    # every other registered query is benched too (after the headline set),
+    # so a regression anywhere in the surface is visible round over round
+    names = list(BENCH_QUERIES) + sorted(set(registry.QUERIES) - set(BENCH_QUERIES))
 
     def time_query(fn) -> float:
         # r17 methodology fix (r16 verdict item 3): pins AND process-level

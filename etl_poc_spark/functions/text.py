@@ -70,14 +70,3 @@ def field_completeness(*cols: Column) -> Column:
         term = F.when(F.trim(F.coalesce(c, F.lit(""))) != "", F.lit(1)).otherwise(F.lit(0))
         filled = term if filled is None else filled + term
     return filled.cast("double") / F.lit(float(n))
-
-
-def length_band(col: Column, full: tuple[int, int], partial: tuple[int, int], minimal_gt: int,
-                pts_full: int, pts_partial: int, pts_minimal: int) -> Column:
-    """Banded integer scoring over a length/count column (zara_hybrid_etl.py:216-217)."""
-    return (
-        F.when(col.between(*full), F.lit(pts_full))
-        .when(col.between(*partial), F.lit(pts_partial))
-        .when(col > minimal_gt, F.lit(pts_minimal))
-        .otherwise(F.lit(0))
-    )

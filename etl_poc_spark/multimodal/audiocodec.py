@@ -4,13 +4,14 @@ Same posture as `imagecodec`: formats the Python stdlib can genuinely
 PARSE are decoded for REAL (RIFF/WAVE PCM via the `wave` module);
 everything else (mp3, ogg, flac — all need entropy coders the stdlib
 lacks) is the caller's honest-fallback problem. The per-sample math is
-numpy-vectorized (r17, guide §4.2 — numpy is already a hard dependency
-of the Arrow/pandas path these kernels run inside), and it is EXACT, not
-just close: every PCM-derived sample is a dyadic rational v / 2^k with
-|Σ v²| < 2^53 under the MAX_SAMPLES cap, so every partial sum — in any
-association order, numpy pairwise or Python sequential — is exactly
-representable and the results are bit-identical to the scalar loops
-they replaced (the pinned audio_feature_stats values are unchanged).
+numpy-vectorized (numpy is already a hard dependency of the Arrow/pandas
+path these kernels run inside), and `wav_stats` is EXACT for any channel
+count: the RMS is computed from the INTEGER per-frame channel sums — the
+sum of their squares is an exact Python int and is divided once
+(correctly rounded) by n·(nch·scale)², so no association order or
+non-dyadic channel divisor (3, 5, 6 channels) can perturb it. Peak is one
+correctly rounded division of the largest integer |sum|, and the
+zero-crossing rate only reads signs.
 
 Reference tie-in: the reference pipeline is text-only
 (`airflow/dags/zara_hybrid_etl.py`); audio columns are part of the
@@ -43,15 +44,21 @@ def sniff_audio_format(data: bytes) -> str:
     return "unknown"
 
 
-def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
-    """RIFF/WAVE PCM -> (sample_rate, n_channels, n_frames, mono float64
-    samples in [-1, 1], first MAX_SAMPLES frames, channels averaged).
-    Raises wave.Error/ValueError/struct.error on non-WAV or compressed
-    input — callers map those to their fallback, mirroring imagecodec.
+def _sum_squares(v: "np.ndarray") -> int:
+    """Exact Σ v² of an int64 array, as a Python int: int64 dot products
+    over chunks short enough that no partial sum can overflow."""
+    peak = int(np.max(np.abs(v), initial=0))
+    step = max(1, (1 << 62) // max(1, peak * peak))
+    return sum(int(np.dot(v[i:i + step], v[i:i + step])) for i in range(0, v.size, step))
 
-    Vectorized (r17), value-identical to the scalar loop it replaced:
-    int16/uint8 decode is a reinterpret, the per-frame channel average is
-    an exact small-integer sum followed by the same single division."""
+
+def wav_stats(data: bytes) -> tuple[int, int, int, float, float, float]:
+    """RIFF/WAVE PCM -> (sample_rate, n_channels, n_frames, rms, peak,
+    zero_crossing_rate) of the channel-averaged first MAX_SAMPLES frames,
+    exact for any channel count (module docstring); zeros for a clip with
+    no frames. Raises wave.Error/ValueError/struct.error on non-WAV or
+    compressed input — callers map those to their fallback, mirroring
+    imagecodec."""
     with wave.open(io.BytesIO(data), "rb") as w:
         sr, nch, width, nframes = (
             w.getframerate(), w.getnchannels(), w.getsampwidth(), w.getnframes(),
@@ -62,33 +69,18 @@ def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
         raw = w.readframes(take)
     if width == 2:
         vals = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        scale = 32768.0
+        scale = 32768
     else:  # 8-bit WAV PCM is unsigned
         vals = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
-        scale = 128.0
-    if nch > 1:
-        frames = vals[: (len(vals) // nch) * nch].reshape(-1, nch)
-        mono = frames.sum(axis=1) / (nch * scale)
-    else:
-        mono = vals / scale
-    return sr, nch, nframes, mono
-
-
-def audio_stats(samples) -> tuple[float, float, float]:
-    """(rms, peak, zero_crossing_rate) of a mono sample array; zeros for
-    an empty one. Vectorized over the capped prefix — bounded CPU per
-    file, and EXACT for PCM-derived input (see module docstring: dyadic
-    samples keep every partial sum of squares under 2^53, so numpy's
-    pairwise summation computes the same exact value the sequential
-    Python sum did, and sqrt/abs/max are correctly-rounded per IEEE
-    either way)."""
-    s = np.asarray(samples, dtype=np.float64)
-    n = s.size
+        scale = 128
+    # per-frame integer channel sums; a sum / (nch·scale) is the mono sample
+    sums = vals[: (len(vals) // nch) * nch].reshape(-1, nch).sum(axis=1)
+    div = nch * scale
+    n = sums.size
     if n == 0:
-        return 0.0, 0.0, 0.0
-    rms = float((np.dot(s, s) / n) ** 0.5)
-    peak = float(np.max(np.abs(s)))
-    neg = s < 0
-    crossings = int(np.count_nonzero(neg[:-1] != neg[1:]))
-    zcr = crossings / (n - 1) if n > 1 else 0.0
-    return rms, peak, zcr
+        return sr, nch, nframes, 0.0, 0.0, 0.0
+    rms = (_sum_squares(sums) / (n * div * div)) ** 0.5
+    peak = int(np.max(np.abs(sums))) / div
+    neg = sums < 0
+    zcr = int(np.count_nonzero(neg[:-1] != neg[1:])) / (n - 1) if n > 1 else 0.0
+    return sr, nch, nframes, rms, peak, zcr

@@ -329,8 +329,7 @@ def decode_audio_features(df: DataFrame, content_col: str = "content",
                 data = bytes(content)
                 fmt = audiocodec.sniff_audio_format(data)
                 try:
-                    sr, nch, nframes, mono = audiocodec.decode_wav(data)
-                    rms, peak, zcr = audiocodec.audio_stats(mono)
+                    sr, nch, nframes, rms, peak, zcr = audiocodec.wav_stats(data)
                     decoded = True
                 except (_wave.Error, ValueError, struct_error, EOFError) as e:
                     if strict:

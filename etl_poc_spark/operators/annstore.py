@@ -165,7 +165,7 @@ def incremental_ann_ingest(
     reindex can rewrite exactly the slots that hold stale rows (NULL for
     loose appends, which reindex refuses — it cannot rewrite rows it
     cannot address). Returns the written postings frame."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
+    from etl_poc_spark.operators.deltastore import _safe_tag
 
     cents, seq = _current_model(spark, index_dir)
     assigned = _assign_centroid(batch, cents, id_col, vec_col, nprobe=1)
@@ -300,16 +300,11 @@ def streaming_ann_ingest(
     a configured DataStreamWriter — call .trigger(...).start(); serve
     probes any time with ann_store_topk, which reads index + postings
     live."""
+    from etl_poc_spark.operators.deltastore import foreach_batch
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ann_handle_batch(
-            batch_df, batch_id,
-            index_dir=index_dir, store_dir=store_dir,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch(
+        stream, checkpoint_dir, ann_handle_batch,
+        index_dir=index_dir, store_dir=store_dir, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -319,8 +314,7 @@ def read_ann_store(
     """The accumulated postings (cluster, id, vector, model_seq) — a SET,
     so no fold: each vector appears once under the single-writer-per-tag
     contract. Compaction-manifest aware via read_delta_store."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
+    from etl_poc_spark.operators.deltastore import _safe_tag, read_delta_store
 
     excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
     return read_delta_store(spark, store_dir, exclude_slot=excl)

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_poc_spark.operators.deltastore import TAG, DeltaLog, foreach_batch
+
 
 def hash_bucket(col: Column, n_buckets: int = 100, salt: str = "") -> Column:
     """Deterministic engine-portable bucket in [0, n_buckets): the first 6
@@ -687,6 +689,9 @@ def doremi_weights_from_stats(
     )
 
 
+DOREMI_LOG = DeltaLog(("domain",), (("n", "sum"), ("s", "sum")), TAG, prefix="batch-")
+
+
 def incremental_doremi_ingest(
     spark,
     batch: DataFrame,
@@ -697,18 +702,11 @@ def incremental_doremi_ingest(
     batch_tag: str | None = None,
 ) -> None:
     """Fold a batch of per-example excess losses into a DoReMi stats
-    store: an append-only delta log of per-domain (n, s) partials —
-    clipped-excess sums and example counts are ADDITIVE, so the folded
-    store equals the one-shot aggregation over the union of every batch
-    in any slicing (exact BIGINTs; equivalence pytest).
-
-    Idempotency/replay: a stable `batch_tag` slots the delta under
-    tag=<tag> with overwrite semantics (at-least-once replay replaces its
-    own slot — the ngram_lm/dsir delta-log discipline). Concurrency
-    contract: single writer per tag (tests/test_store_concurrency.py
-    class)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
+    store: a delta log (operators/deltastore.py) of per-domain (n, s)
+    partials — clipped-excess sums and example counts are ADDITIVE, so
+    the folded store equals the one-shot aggregation over the union of
+    every batch in any slicing (exact BIGINTs; equivalence pytest). A
+    stable `batch_tag` makes a replay replace its own slot."""
     deltas = (
         batch.select(
             F.col(domain_col).alias("domain"),
@@ -717,12 +715,7 @@ def incremental_doremi_ingest(
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("__e").alias("s"))
     )
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(
-            f"{store_dir}/tag={_safe_tag(batch_tag)}"
-        )
-    else:
-        deltas.write.mode("append").parquet(store_dir)
+    DOREMI_LOG.write(deltas, store_dir, batch_tag)
 
 
 def read_doremi_store(
@@ -731,27 +724,15 @@ def read_doremi_store(
     """Fold the delta log to the current per-domain stats frame
     (domain, n_examples, sum_excess) — ≤ k rows. `exclude_tag` drops
     that batch's slot (the replay seam)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    df = read_delta_store(spark, store_dir, exclude_slot=excl)
-    return df.groupBy("domain").agg(
-        F.sum("n").alias("n_examples"), F.sum("s").alias("sum_excess")
+    return DOREMI_LOG.read(spark, store_dir, exclude_tag).withColumnsRenamed(
+        {"n": "n_examples", "s": "sum_excess"}
     )
 
 
 def compact_doremi_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the DoReMi stats store's old tag slots into one consolidated
-    slot (operators/deltastore.py protocol; additive BIGINT partials, so
-    doremi_store_weights is bit-equal before and after)."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["domain"], agg=[("n", "sum"), ("s", "sum")], **kwargs,
-    )
+    """Compact the DoReMi stats store (operators/deltastore.py);
+    doremi_store_weights is bit-equal before and after."""
+    return DOREMI_LOG.compact(spark, store_dir, **kwargs)
 
 
 def doremi_store_weights(
@@ -788,12 +769,9 @@ def doremi_handle_batch(
     """foreachBatch body for streaming DoReMi stats maintenance —
     batch id = tag slot, so at-least-once delivery folds exactly once."""
     incremental_doremi_ingest(
-        batch_df.sparkSession,
-        batch_df,
-        store_dir,
-        domain_col=domain_col,
-        excess_col=excess_col,
-        batch_tag=f"batch-{batch_id}",
+        batch_df.sparkSession, batch_df, store_dir,
+        domain_col=domain_col, excess_col=excess_col,
+        **DOREMI_LOG.stream_slot(batch_id),
     )
 
 
@@ -806,23 +784,12 @@ def streaming_doremi_ingest(
     excess_col: str = "excess",
 ):
     """Continuous DoReMi stats maintenance over a stream of per-example
-    excess losses (e.g. a training job's eval log landing zone): each
-    micro-batch folds its per-domain partials into the store
-    exactly-once. Returns a configured DataStreamWriter — call
-    .trigger(...).start(); read the live weights any time with
-    doremi_store_weights."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        doremi_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            domain_col=domain_col,
-            excess_col=excess_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    excess losses (e.g. a training job's eval log landing zone). Returns
+    a configured DataStreamWriter — call .trigger(...).start(); read the
+    live weights any time with doremi_store_weights."""
+    return foreach_batch(
+        stream, checkpoint_dir, doremi_handle_batch,
+        store_dir=store_dir, domain_col=domain_col, excess_col=excess_col,
     )
 
 
@@ -1162,6 +1129,11 @@ def exact_ols_fit(
     )
 
 
+BADWORDS_LOG = DeltaLog(
+    ("domain",), (("n", "sum"), ("f", "sum"), ("h", "sum")), TAG, prefix="batch-"
+)
+
+
 def incremental_badwords_ingest(
     spark,
     batch: DataFrame,
@@ -1173,18 +1145,13 @@ def incremental_badwords_ingest(
     batch_tag: str | None = None,
 ) -> None:
     """Fold a batch of documents into a badwords-monitoring stats store:
-    an append-only delta log of per-domain (n_docs, n_flagged, n_hits)
-    partials — all three are ADDITIVE, so the folded store equals the
-    one-shot aggregation over the union of every batch in any slicing
-    (the doremi/dsir delta-log discipline; equivalence pytest). This is
-    the content-safety dashboard a continuous web-crawl ingest keeps
-    live: which sources are trending dirty, before the filter drops them.
-
-    Idempotency/replay: a stable `batch_tag` slots the delta under
-    tag=<tag> with overwrite semantics. Concurrency contract: single
-    writer per tag (tests/test_store_concurrency.py class)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
+    a delta log (operators/deltastore.py) of per-domain (n_docs,
+    n_flagged, n_hits) partials — all three are ADDITIVE, so the folded
+    store equals the one-shot aggregation over the union of every batch
+    in any slicing (equivalence pytest). This is the content-safety
+    dashboard a continuous web-crawl ingest keeps live: which sources are
+    trending dirty, before the filter drops them. A stable `batch_tag`
+    makes a replay replace its own slot."""
     flagged = c4_badwords_flags(batch, badwords, text_col=text_col)
     deltas = (
         flagged.select(
@@ -1199,40 +1166,24 @@ def incremental_badwords_ingest(
             F.sum("__h").alias("h"),
         )
     )
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(
-            f"{store_dir}/tag={_safe_tag(batch_tag)}"
-        )
-    else:
-        deltas.write.mode("append").parquet(store_dir)
+    BADWORDS_LOG.write(deltas, store_dir, batch_tag)
 
 
 def read_badwords_store(spark, store_dir: str) -> DataFrame:
     """Fold the delta log to the current per-domain badwords stats
-    (domain, n_docs, n_flagged, n_hits) — ≤ k rows. Compaction-aware
-    (operators/deltastore.py); additive partials keep the fold bit-equal
-    after compact_badwords_store."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    df = read_delta_store(spark, store_dir)
-    return df.groupBy("domain").agg(
-        F.sum("n").cast("bigint").alias("n_docs"),
-        F.sum("f").cast("bigint").alias("n_flagged"),
-        F.sum("h").cast("bigint").alias("n_hits"),
+    (domain, n_docs, n_flagged, n_hits) — ≤ k rows."""
+    return BADWORDS_LOG.read(spark, store_dir).select(
+        "domain",
+        F.col("n").cast("bigint").alias("n_docs"),
+        F.col("f").cast("bigint").alias("n_flagged"),
+        F.col("h").cast("bigint").alias("n_hits"),
     )
 
 
 def compact_badwords_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the badwords stats store's old tag slots into one
-    consolidated slot (operators/deltastore.py protocol; all three
-    partials are additive, so the dashboard fold is bit-equal)."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["domain"], agg=[("n", "sum"), ("f", "sum"), ("h", "sum")],
-        **kwargs,
-    )
+    """Compact the badwords stats store (operators/deltastore.py); the
+    dashboard fold is bit-equal before and after."""
+    return BADWORDS_LOG.compact(spark, store_dir, **kwargs)
 
 
 def badwords_handle_batch(
@@ -1247,13 +1198,9 @@ def badwords_handle_batch(
     """foreachBatch body for streaming badwords monitoring — batch id =
     tag slot, so at-least-once delivery folds exactly once."""
     incremental_badwords_ingest(
-        batch_df.sparkSession,
-        batch_df,
-        store_dir,
-        badwords=badwords,
-        domain_col=domain_col,
-        text_col=text_col,
-        batch_tag=f"batch-{batch_id}",
+        batch_df.sparkSession, batch_df, store_dir,
+        badwords=badwords, domain_col=domain_col, text_col=text_col,
+        **BADWORDS_LOG.stream_slot(batch_id),
     )
 
 
@@ -1267,22 +1214,11 @@ def streaming_badwords_ingest(
     text_col: str = "text",
 ):
     """Continuous per-domain badwords monitoring over a document stream
-    (the content-safety twin of streaming_doremi_ingest): each
-    micro-batch folds its per-domain flag partials into the store
-    exactly-once. Returns a configured DataStreamWriter — call
-    .trigger(...).start(); read the live dashboard any time with
-    read_badwords_store."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        badwords_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            badwords=badwords,
-            domain_col=domain_col,
-            text_col=text_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    (the content-safety twin of streaming_doremi_ingest). Returns a
+    configured DataStreamWriter — call .trigger(...).start(); read the
+    live dashboard any time with read_badwords_store."""
+    return foreach_batch(
+        stream, checkpoint_dir, badwords_handle_batch,
+        store_dir=store_dir, badwords=badwords,
+        domain_col=domain_col, text_col=text_col,
     )

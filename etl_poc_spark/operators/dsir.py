@@ -32,6 +32,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    TAG,
+    DeltaLog,
+    foreach_batch,
+    store_exists,
+)
 from etl_poc_spark.operators.ngram_lm import words_col
 from etl_poc_spark.operators.pins import pin
 
@@ -315,8 +321,8 @@ def dsir_resample(
 
 
 # ---------------------------------------------------------------------------
-# Incremental / streaming model maintenance (the ngram_lm store discipline:
-# append-only tag-slotted delta logs, replay-idempotent, crash-healable)
+# Incremental / streaming model maintenance: one delta log per role
+# (operators/deltastore.py)
 # ---------------------------------------------------------------------------
 
 
@@ -332,6 +338,9 @@ def _dsir_batch_deltas(batch: DataFrame, text_col: str, n_buckets: int) -> DataF
     )
 
 
+DSIR_LOG = DeltaLog(("bucket",), (("n", "sum"),), TAG)
+
+
 def incremental_dsir_ingest(
     spark,
     batch: DataFrame,
@@ -344,35 +353,17 @@ def incremental_dsir_ingest(
 ) -> None:
     """Fold `batch` into the DSIR model store at `store_dir` under
     `role` ('raw' or 'target' — the two sides of the likelihood ratio;
-    each is an independent append-only delta log).
-
-    Idempotency: a stable `batch_tag` slots the delta under tag=<tag>
-    with overwrite semantics, so an at-least-once replay replaces its
-    own delta instead of double-counting (the streaming twin passes the
-    micro-batch id). After any sequence of ingests, read_dsir_store
-    equals the one-shot histogram over the union of every batch —
-    exact integers, bit-equal under any batch slicing.
-
-    Concurrency contract: single writer per tag (sequential same-tag
-    rewrite = last-writer-wins replay; concurrent distinct tags safe;
-    concurrent same-tag out of contract, heals on replay) — stated and
-    pinned in tests/test_store_concurrency.py."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
+    each is an independent delta log, operators/deltastore.py). A stable
+    `batch_tag` makes a replay replace its own tag=<batch_tag> slot.
+    After any sequence of ingests, read_dsir_store equals the one-shot
+    histogram over the union of every batch — exact integers, bit-equal
+    under any batch slicing."""
     deltas = _dsir_batch_deltas(batch, text_col, n_buckets)
-    sub = f"{store_dir}/{role}"
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(f"{sub}/tag={_safe_tag(batch_tag)}")
-    else:
-        deltas.write.mode("append").parquet(sub)
+    DSIR_LOG.write(deltas, f"{store_dir}/{role}", batch_tag)
 
 
 def dsir_store_exists(spark, store_dir: str, role: str = "raw") -> bool:
-    """Hadoop-FS existence probe for a role's delta log (portable to
-    HDFS/S3 URIs; no exception-message string matching)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{store_dir}/{role}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    return store_exists(spark, f"{store_dir}/{role}")
 
 
 def read_dsir_store(
@@ -380,30 +371,16 @@ def read_dsir_store(
 ) -> DataFrame:
     """Fold a role's delta log to its current histogram (bucket, c) —
     ≤ n_buckets rows. `exclude_tag` drops that batch's slot from the
-    fold (the replay seam: a replayed tagged batch reads the store as it
-    stood before its own crashed attempt). Compaction-aware
-    (operators/deltastore.py): after compact_dsir_store folds old tag
-    slots the histogram is bit-equal while the listing cost drops to
-    O(tail)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    df = read_delta_store(spark, f"{store_dir}/{role}", exclude_slot=excl)
-    return df.groupBy("bucket").agg(F.sum("n").alias("c"))
+    fold (the replay seam)."""
+    log = DSIR_LOG.read(spark, f"{store_dir}/{role}", exclude_tag)
+    return log.withColumnRenamed("n", "c")
 
 
 def compact_dsir_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold each existing role log ('raw'/'target') of the DSIR store
-    into one consolidated slot (operators/deltastore.py protocol; reads
-    bit-equal — exact integer bucket counts). Returns per-role reports."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
+    """Compact each existing role log ('raw'/'target') of the DSIR store
+    (operators/deltastore.py). Returns per-role reports."""
     return {
-        role: compact_delta_store(
-            spark, f"{store_dir}/{role}",
-            key_cols=["bucket"], agg=[("n", "sum")], **kwargs,
-        )
+        role: DSIR_LOG.compact(spark, f"{store_dir}/{role}", **kwargs)
         for role in ("raw", "target")
         if dsir_store_exists(spark, store_dir, role)
     }
@@ -480,16 +457,11 @@ def dsir_handle_batch(
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
-    """One micro-batch of streaming_dsir_ingest, module-level so the
-    replay contract is directly testable: same batch_id twice ==
-    once (the tag slot overwrites)."""
+    """One micro-batch of streaming_dsir_ingest: the same batch_id twice
+    leaves the store as once (the tag=<role>-b<id> slot overwrites)."""
     incremental_dsir_ingest(
-        batch_df.sparkSession,
-        batch_df,
-        store_dir,
-        role=role,
-        text_col=text_col,
-        n_buckets=n_buckets,
+        batch_df.sparkSession, batch_df, store_dir,
+        role=role, text_col=text_col, n_buckets=n_buckets,
         batch_tag=f"{role}-b{batch_id}",
     )
 
@@ -503,24 +475,13 @@ def streaming_dsir_ingest(
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
 ):
-    """Continuous DSIR model maintenance: each micro-batch folds its
-    bucket histogram into the shared store exactly-once (batch id = tag
-    slot). Returns a configured DataStreamWriter — call
-    .trigger(...).start(). Read the live model any time with
-    read_dsir_model; score with score_dsir_store."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dsir_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            role=role,
-            text_col=text_col,
-            n_buckets=n_buckets,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    """Continuous DSIR model maintenance, one tag slot per micro-batch.
+    Returns a configured DataStreamWriter — call .trigger(...).start().
+    Read the live model any time with read_dsir_model; score with
+    score_dsir_store."""
+    return foreach_batch(
+        stream, checkpoint_dir, dsir_handle_batch,
+        store_dir=store_dir, role=role, text_col=text_col, n_buckets=n_buckets,
     )
 
 
@@ -617,21 +578,10 @@ def streaming_dsir_monitor(
     everything that came before, then folded into the raw model.
     Returns a configured DataStreamWriter; read the drift series with
     spark.read.parquet(monitor_dir)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dsir_monitor_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            monitor_dir=monitor_dir,
-            id_col=id_col,
-            text_col=text_col,
-            n_buckets=n_buckets,
-            fold=fold,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch(
+        stream, checkpoint_dir, dsir_monitor_handle_batch,
+        store_dir=store_dir, monitor_dir=monitor_dir, id_col=id_col,
+        text_col=text_col, n_buckets=n_buckets, fold=fold,
     )
 
 

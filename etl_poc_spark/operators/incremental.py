@@ -6,10 +6,10 @@ arXiv batches daily — zara_hybrid_etl.py's idempotent download loop — but
 dedups only within a run; this closes that gap Spark-first):
 
 - the store holds only (band, band_val, id) rows — a few hundred bytes per
-  document regardless of body size; band/band_val are DATA columns (r16:
-  previously band was a write partition dir, which the compaction-aware
-  recursive read cannot preserve — the probe is an equi-join on the full
-  (band, band_val) key, so directory pruning never fired anyway);
+  document regardless of body size; band/band_val are DATA columns, not
+  partition directories: the recursive store read cannot preserve a
+  partition column, and the probe is an equi-join on the full
+  (band, band_val) key, so directory pruning would never fire anyway;
 - an incoming batch NEVER joins against historical bodies: batch bands
   semi/anti-join the store on (band, band_val), so history participates
   as an equi-join build side of signature rows only;
@@ -28,7 +28,6 @@ sets for the whole corpus, which is exactly what the band store avoids.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +38,18 @@ from etl_poc_spark.operators.dedup import (
     minhash_signatures,
     shingle_docs,
 )
+from etl_poc_spark.operators.deltastore import (
+    BATCH_ID,
+    TAG,
+    DeltaLog,
+    foreach_batch,
+    ingest_and_keep,
+)
+
+# the band postings are a SET: DISTINCT over every column (the id column
+# is whatever the ingest's id_col was)
+NEAR_DUP_LOG = DeltaLog(None, (), BATCH_ID)
+EXACT_LOG = DeltaLog(("fp",), (("min_id", "min"), ("n_copies", "sum")), TAG, prefix="b")
 
 
 def batch_band_signatures(
@@ -73,38 +84,17 @@ def incremental_near_dup_ingest(
     kept (novel, batch-deduped) rows of `batch` and appends their bands to
     the store. See module docstring for the decision rule and scale shape.
 
-    `batch_id` (the streaming seam, same protocol as
-    incremental_line_dedup_ingest): when set, the store rows write
-    PARTITIONED by batch_id with dynamic partition overwrite and the
-    history read EXCLUDES the current batch_id — a replayed micro-batch
-    overwrites its own partition instead of double-appending, and never
-    sees its prior attempt's bands as history (which would drop every
-    row as a self-hit and lose the batch's kept output)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
+    `batch_id` (the streaming seam): the store rows go to the
+    batch_id=<n> slot and the history read excludes it, so a replayed
+    micro-batch never sees its prior attempt's bands as history (which
+    would drop every row as a self-hit and lose the batch's kept output).
+    A batch_id replay against a loose-append store raises
+    DeltaStoreModeError instead."""
     bands = batch_band_signatures(
         batch, id_col, text_col, n_hashes, rows_per_band, hash_mode
     )
-    try:
-        # compaction-aware read (operators/deltastore.py); slot-level
-        # replay exclusion, and a batch_id replay against a loose-append
-        # store raises DeltaStoreModeError instead of silently counting
-        # the prior attempt's bands as history (ADVICE r15)
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=(
-                f"batch_id={int(batch_id)}" if batch_id is not None else None
-            ),
-        )
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only: the store path does not exist yet. Any OTHER
-        # analysis failure (corrupt footer, schema mismatch) must surface —
-        # treating it as "no history" would silently dedup against nothing.
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    if have_store:
+    store = NEAR_DUP_LOG.history(spark, store_dir, batch_id)
+    if store is not None:
         # ids sharing >= 1 full band with history are near-dups of history
         hit_ids = (
             bands.join(store, ["band", "band_val"], "left_semi")
@@ -134,39 +124,15 @@ def incremental_near_dup_ingest(
     # documents too short to shingle produce no bands: they can never be
     # caught by the store filter, so they pass through (documented; exact
     # dedup upstream is the right guard for tiny docs)
-    if batch_id is None:
-        kept_bands.write.mode("append").parquet(store_dir)
-    else:
-        (
-            kept_bands.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
+    NEAR_DUP_LOG.write(kept_bands, store_dir, batch_id)
     return kept
 
 
 def compact_near_dup_store(spark: SparkSession, store_dir: str, **kwargs) -> dict:
-    """Fold the band store's old batch_id slots into one consolidated
-    slot (operators/deltastore.py protocol, SET fold: the postings carry
-    no counts, so consolidation is DISTINCT over (band, band_val, id) —
-    every reader is a semi-join, for which duplicates were already
-    invisible, hence reads are bit-equal before/after). keep_slots
-    (default 1) protects the in-flight micro-batch's replay exclusion.
-
-    Note the id column is whatever the ingest's id_col was; the store
-    schema is discovered from the slots themselves (key_cols = all
-    columns minus none — DISTINCT over the full row)."""
-    from etl_poc_spark.operators.deltastore import (
-        compact_delta_store,
-        read_delta_store,
-    )
-
-    cols = read_delta_store(spark, store_dir).columns
-    return compact_delta_store(
-        spark, store_dir, key_cols=list(cols), agg=[], **kwargs
-    )
+    """Compact the band store (operators/deltastore.py, SET fold: every
+    reader is a semi-join, for which duplicates were already invisible,
+    so reads are bit-equal before and after)."""
+    return NEAR_DUP_LOG.compact(spark, store_dir, **kwargs)
 
 
 def streaming_near_dup_ingest(
@@ -179,37 +145,19 @@ def streaming_near_dup_ingest(
     **ingest_kwargs,
 ):
     """Continuous ingestion: each micro-batch runs the same
-    incremental_near_dup_ingest against the shared band store and appends
-    its survivors to `kept_dir`. Returns a configured DataStreamWriter —
-    call .trigger(...).start() to run.
+    incremental_near_dup_ingest against the shared band store and writes
+    its survivors to the batch_id=<n> slot of `kept_dir`. Returns a
+    configured DataStreamWriter — call .trigger(...).start() to run.
 
     foreachBatch is the right seam: the dedup decision needs the batch as
     a finite frame (self-pairs + store anti-join), which pure streaming
-    operators can't express. foreachBatch delivery is AT-LEAST-ONCE — a
-    batch interrupted mid-write replays on restart — so both side effects
-    are keyed by batch_id with dynamic partition overwrite (the same
-    protocol as streaming_line_dedup_ingest): the replay overwrites its
-    own store and kept partitions rather than double-appending, and the
-    store read excludes the current batch_id so the replayed batch never
-    self-hits. Read kept via spark.read.parquet(kept_dir) — batch_id is
-    an inferred partition column."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        kept = incremental_near_dup_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id,
-            **ingest_kwargs,
-        )
-        (
-            kept.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    operators can't express. Read kept via spark.read.parquet(kept_dir) —
+    batch_id is an inferred partition column."""
+    return foreach_batch(
+        stream, checkpoint_dir, ingest_and_keep,
+        ingest=incremental_near_dup_ingest, log=NEAR_DUP_LOG,
+        store_dir=store_dir, kept_dir=kept_dir,
+        id_col=id_col, text_col=text_col, **ingest_kwargs,
     )
 
 
@@ -253,56 +201,28 @@ def incremental_exact_dedup_ingest(
     batch's per-fingerprint delta, and return the kept rows (one
     representative per NOVEL fingerprint, min `id_col`).
 
-    Store layout is an append-only log of (fp, min_id, n_copies) deltas —
-    the same log-structured discipline as the line-dedup segment store:
-    no rewrite, reads aggregate (read_exact_dedup_store), so the ingest
-    shuffles only fingerprint-sized rows, never bodies. Duplicate copies
-    of already-stored content still COUNT (n_copies accumulates — the
-    store total equals a from-scratch exact_dedup over everything ever
-    ingested) but are not returned as kept rows.
+    The store is a delta log (operators/deltastore.py) of (fp, min_id,
+    n_copies) deltas: no rewrite, reads fold (read_exact_dedup_store),
+    so the ingest shuffles only fingerprint-sized rows, never bodies.
+    Duplicate copies of already-stored content still COUNT (n_copies
+    accumulates — the store total equals a from-scratch exact_dedup over
+    everything ever ingested) but are not returned as kept rows.
 
-    Idempotency: pass a stable `batch_tag` to slot the delta under
-    tag=<batch_tag> with overwrite semantics — re-ingesting the same
-    batch replaces its own delta instead of double-counting. The
-    streaming twin gets this for free from foreachBatch checkpointing
-    (exactly-once per batch id) and passes the batch id as the tag.
-
-    Concurrency contract: single writer per tag (sequential same-tag
-    rewrite = last-writer-wins replay; concurrent distinct tags safe;
-    concurrent same-tag out of contract, heals on replay) — stated and
-    pinned in tests/test_store_concurrency.py."""
+    A stable `batch_tag` slots the delta under tag=<batch_tag>: a
+    replay replaces its own delta, and its history read excludes that
+    slot — otherwise every fp reads as a store hit, kept recomputes as
+    empty, and the replay loses the representatives the crashed attempt
+    never flushed to the kept sink."""
     fps = exact_fingerprints(batch, key_cols, id_col, hash_mode)
     delta = fps.groupBy("fp").agg(
         F.min("id").alias("min_id"), F.count(F.lit(1)).alias("n_copies")
     )
-    safe = (
-        "".join(ch if ch.isalnum() or ch in "-_." else "_" for ch in batch_tag)
-        if batch_tag is not None
-        else None
+    store = EXACT_LOG.history(spark, store_dir, batch_tag)
+    novel = (
+        delta
+        if store is None
+        else delta.join(store.select("fp").distinct(), "fp", "left_anti")
     )
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    try:
-        # compaction-aware read (operators/deltastore.py); the exclude
-        # drops a REPLAYED tagged batch's own prior delta — otherwise
-        # every fp reads as a store hit, kept recomputes as empty, and
-        # the replay loses the representatives the crashed attempt never
-        # flushed to the kept sink
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=f"tag={safe}" if safe is not None else None,
-        )
-        store = store.select("fp").distinct()
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only: the store path does not exist yet. Any OTHER
-        # analysis failure must surface — treating a corrupt/unreadable
-        # store as "first ingest" would emit duplicates as kept and
-        # silently fork the store instead of failing loudly.
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    novel = delta.join(store, "fp", "left_anti") if have_store else delta
     # representatives materialize BEFORE the store append (the plan reads
     # the store through the anti-join; parquet listing happens at action
     # time — same seam as incremental_near_dup_ingest)
@@ -311,39 +231,21 @@ def incremental_exact_dedup_ingest(
         F.col("id").alias(id_col)
     )
     kept = batch.join(kept_ids, id_col, "left_semi").localCheckpoint(eager=True)
-    if safe is not None:
-        delta.write.mode("overwrite").parquet(f"{store_dir}/tag={safe}")
-    else:
-        delta.write.mode("append").parquet(store_dir)
+    EXACT_LOG.write(delta, store_dir, batch_tag)
     return kept
 
 
 def read_exact_dedup_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Fold the delta log to the current (fp, min_id, n_copies) state —
     equal to operators.dedup.exact_dedup over the union of every batch
-    ever ingested (mergeable: MIN and SUM are associative). Compaction-
-    aware: after compact_exact_dedup_store the fold is bit-equal while
-    the listing cost drops to O(tail)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    log = read_delta_store(spark, store_dir)
-    return log.groupBy("fp").agg(
-        F.min("min_id").alias("min_id"), F.sum("n_copies").alias("n_copies")
-    )
+    ever ingested (mergeable: MIN and SUM are associative)."""
+    return EXACT_LOG.read(spark, store_dir)
 
 
 def compact_exact_dedup_store(spark: SparkSession, store_dir: str, **kwargs) -> dict:
-    """Fold the fingerprint store's old tag slots into one consolidated
-    slot (operators/deltastore.py protocol). MIN(min_id) and
-    SUM(n_copies) are associative, so reads before and after are
-    bit-equal; keep_slots (default 1) protects the in-flight replay."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["fp"], agg=[("min_id", "min"), ("n_copies", "sum")],
-        **kwargs,
-    )
+    """Compact the fingerprint store (operators/deltastore.py); reads
+    are bit-equal before and after."""
+    return EXACT_LOG.compact(spark, store_dir, **kwargs)
 
 
 def streaming_exact_dedup_ingest(
@@ -357,27 +259,15 @@ def streaming_exact_dedup_ingest(
 ):
     """Continuous exact dedup: each micro-batch runs
     incremental_exact_dedup_ingest against the shared fingerprint store
-    and appends its novel representatives to `kept_dir`. Returns a
-    configured DataStreamWriter — call .trigger(...).start().
-
-    The batch id doubles as the store slot tag, so a replayed micro-batch
-    (restart before checkpoint commit) overwrites its own delta instead
-    of double-counting — exactly-once store semantics without a
-    transaction log. The kept sink is slotted the same way (batch_id
-    partition, dynamic overwrite): a replay REPLACES its own kept rows
-    rather than re-appending the same representatives — without this the
-    store was exactly-once but the output wasn't. Read kept via
+    (batch id = tag slot) and writes its novel representatives to the
+    batch_id=<n> slot of `kept_dir`. Returns a configured
+    DataStreamWriter — call .trigger(...).start(). Read kept via
     spark.read.parquet(kept_dir); batch_id is an inferred partition
     column."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        exact_dedup_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, kept_dir=kept_dir,
-            key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch(
+        stream, checkpoint_dir, exact_dedup_handle_batch,
+        store_dir=store_dir, kept_dir=kept_dir,
+        key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,
     )
 
 
@@ -391,22 +281,13 @@ def exact_dedup_handle_batch(
     id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> None:
-    """One micro-batch of streaming_exact_dedup_ingest, module-level so the
-    replay contract is directly testable: calling this twice with the same
-    batch_id (at-least-once delivery) leaves store AND kept sink in the
-    same state as calling it once — the store via the tag slot, the kept
-    sink via batch_id dynamic partition overwrite."""
-    kept = incremental_exact_dedup_ingest(
-        batch_df.sparkSession, batch_df, store_dir,
+    """One micro-batch of streaming_exact_dedup_ingest: the same batch_id
+    twice leaves store AND kept sink as once (both slots overwrite)."""
+    ingest_and_keep(
+        batch_df, batch_id,
+        ingest=incremental_exact_dedup_ingest, log=EXACT_LOG,
+        store_dir=store_dir, kept_dir=kept_dir,
         key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,
-        batch_tag=f"b{batch_id}",
-    )
-    (
-        kept.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(kept_dir)
     )
 
 

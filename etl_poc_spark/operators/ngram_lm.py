@@ -38,6 +38,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    TAG,
+    DeltaLog,
+    foreach_batch,
+    store_exists,
+)
+
 
 def words_col(text_col: str = "text") -> Column:
     """Whitespace tokens of the trimmed body — the engine's shared
@@ -187,11 +194,9 @@ def perplexity_filter(
 
 
 # ---------------------------------------------------------------------------
-# incremental / streaming LM count maintenance — the same log-structured
-# discipline as the exact-dedup fingerprint store (operators/incremental.py):
-# append-only per-batch deltas, reads fold (SUM is associative/mergeable),
-# tag-slotted overwrite for idempotent replay. Corpus-scale counts never
-# rewrite; each ingest shuffles only (token, partial_count) rows.
+# incremental / streaming LM count maintenance: two delta logs
+# (operators/deltastore.py). Corpus-scale counts never rewrite; each
+# ingest shuffles only (token, partial_count) rows.
 # ---------------------------------------------------------------------------
 
 
@@ -221,6 +226,10 @@ def _lm_batch_deltas(batch: DataFrame, text_col: str) -> tuple[DataFrame, DataFr
     return bi, toks
 
 
+LM_BIGRAMS = DeltaLog(("bigram",), (("n", "sum"),), TAG, prefix="b")
+LM_TOKENS = DeltaLog(("tok",), (("n_tok", "sum"), ("n_hist", "sum")), TAG, prefix="b")
+
+
 def incremental_bigram_lm_ingest(
     spark,
     batch: DataFrame,
@@ -230,47 +239,19 @@ def incremental_bigram_lm_ingest(
     batch_tag: str | None = None,
 ) -> None:
     """Fold `batch` into the bigram-LM count store at `store_dir`
-    (subdirs bigrams/ and tokens/, each an append-only delta log).
-
-    Idempotency: pass a stable `batch_tag` to slot both deltas under
-    tag=<batch_tag> with overwrite semantics — a replayed batch replaces
-    its own deltas instead of double-counting (the streaming twin passes
-    the micro-batch id). After any sequence of ingests,
-    read_bigram_lm_store equals train_bigram_lm over the union of every
-    batch ever ingested.
-
-    Concurrency contract (tests/test_store_concurrency.py): SINGLE
-    WRITER PER TAG — tags come from streaming batch ids, serialized by
-    the checkpoint. A sequential same-tag rewrite is a replay and
-    replaces the slot (last-writer-wins); concurrent DISTINCT tags are
-    safe (independent dirs, associative fold); concurrent SAME-tag
-    writers are out of contract, with damage confined to that slot and
-    healed by one sequential replay."""
+    (subdirs bigrams/ and tokens/, each a delta log — see
+    operators/deltastore.py for the slot and replay contract). A stable
+    `batch_tag` makes a replay replace its own tag=<batch_tag> slots.
+    After any sequence of ingests, read_bigram_lm_store equals
+    train_bigram_lm over the union of every batch ever ingested."""
     bi, toks = _lm_batch_deltas(batch, text_col)
-    if batch_tag is not None:
-        safe = _safe_tag(batch_tag)
-        bi.write.mode("overwrite").parquet(f"{store_dir}/bigrams/tag={safe}")
-        toks.write.mode("overwrite").parquet(f"{store_dir}/tokens/tag={safe}")
-    else:
-        bi.write.mode("append").parquet(f"{store_dir}/bigrams")
-        toks.write.mode("append").parquet(f"{store_dir}/tokens")
-
-
-def _safe_tag(batch_tag: str) -> str:
-    return "".join(
-        ch if ch.isalnum() or ch in "-_." else "_" for ch in batch_tag
-    )
+    LM_BIGRAMS.write(bi, f"{store_dir}/bigrams", batch_tag)
+    LM_TOKENS.write(toks, f"{store_dir}/tokens", batch_tag)
 
 
 def lm_store_exists(spark, store_dir: str) -> bool:
-    """Explicit store-exists probe (Hadoop FS, portable to HDFS/S3 URIs)
-    — the seam that keeps the streaming path free of exception-message
-    string matching. Probes the bigrams/ subdir: both subdirs are
-    written per ingest, bigrams first, so its absence means no ingest
-    has ever started."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{store_dir}/bigrams")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    # bigrams/ is written first, so its absence means no ingest ever started
+    return store_exists(spark, f"{store_dir}/bigrams")
 
 
 def read_bigram_lm_store(
@@ -279,75 +260,36 @@ def read_bigram_lm_store(
     """Fold the delta logs to the current LM: returns
     (bigram_counts, unigram_counts, vocab_size) in the exact shape
     train_bigram_lm produces, so score_bigram_logprob consumes either
-    interchangeably (and bit-identically — counts are exact integers
-    regardless of batch slicing).
-
-    `exclude_tag` drops that batch's tag slot from the fold (same
-    replay seam as incremental_exact_dedup_ingest): a REPLAYED tagged
-    batch must be able to read the store exactly as it stood before its
-    own crashed attempt folded in — otherwise the replay scores the
-    batch against its own counts. Also heals a crash BETWEEN the two
-    subdir writes of incremental_bigram_lm_ingest (bigrams/tag=X
-    written, tokens/tag=X not): excluding X restores a consistent
-    pre-batch view, and the replay's overwrite completes the pair."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    # compaction-aware reads (operators/deltastore.py): after
-    # compact_bigram_lm_store folds old tag slots, this fold is bit-equal
-    # (exact integer counts under any regrouping) while the file listing
-    # drops from O(#batches) to O(tail)
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    bi = (
-        read_delta_store(spark, f"{store_dir}/bigrams", exclude_slot=excl)
-        .groupBy("bigram")
-        .agg(F.sum("n").alias("c_bi"))
-    )
-    toks = (
-        read_delta_store(spark, f"{store_dir}/tokens", exclude_slot=excl)
-        .groupBy("tok")
-        .agg(F.sum("n_tok").alias("n_tok"), F.sum("n_hist").alias("n_hist"))
-    )
+    bit-identically. `exclude_tag` drops that batch's slots — which also
+    heals a crash BETWEEN the two log writes (bigrams/tag=X written,
+    tokens/tag=X not): the pre-batch view stays consistent, and the
+    replay's overwrite completes the pair."""
+    bi = LM_BIGRAMS.read(spark, f"{store_dir}/bigrams", exclude_tag)
+    toks = LM_TOKENS.read(spark, f"{store_dir}/tokens", exclude_tag)
     uni = toks.where(F.col("n_hist") > 0).select(
         F.col("tok").alias("w1"), F.col("n_hist").alias("c_uni")
     )
     vocab = toks.agg(F.count(F.lit(1)).alias("v"))
-    return bi, uni, vocab
+    return bi.withColumnRenamed("n", "c_bi"), uni, vocab
 
 
 def compact_bigram_lm_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the LM store's old tag slots into one consolidated slot per
-    subdir log (operators/deltastore.py protocol; reads bit-equal before
-    and after — the counts are exact integers). Run it from the ingest
-    maintenance loop; keep_slots (default 1) protects the in-flight
-    replay seam. Returns {"bigrams": report, "tokens": report}."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
+    """Compact both logs of the LM store (operators/deltastore.py).
+    Returns {"bigrams": report, "tokens": report}."""
     return {
-        "bigrams": compact_delta_store(
-            spark, f"{store_dir}/bigrams",
-            key_cols=["bigram"], agg=[("n", "sum")], **kwargs,
-        ),
-        "tokens": compact_delta_store(
-            spark, f"{store_dir}/tokens",
-            key_cols=["tok"], agg=[("n_tok", "sum"), ("n_hist", "sum")],
-            **kwargs,
-        ),
+        "bigrams": LM_BIGRAMS.compact(spark, f"{store_dir}/bigrams", **kwargs),
+        "tokens": LM_TOKENS.compact(spark, f"{store_dir}/tokens", **kwargs),
     }
 
 
 def bigram_lm_handle_batch(
     batch_df: DataFrame, batch_id: int, *, store_dir: str, text_col: str = "text"
 ) -> None:
-    """One micro-batch of streaming_bigram_lm_ingest, module-level so the
-    replay contract is directly testable: calling this twice with the
-    same batch_id (at-least-once delivery) leaves the store in the same
-    state as calling it once — the tag slot overwrites."""
+    """One micro-batch of streaming_bigram_lm_ingest: the same batch_id
+    twice leaves the store as once (the tag slot overwrites)."""
     incremental_bigram_lm_ingest(
-        batch_df.sparkSession,
-        batch_df,
-        store_dir,
-        text_col=text_col,
-        batch_tag=f"b{batch_id}",
+        batch_df.sparkSession, batch_df, store_dir,
+        text_col=text_col, **LM_BIGRAMS.stream_slot(batch_id),
     )
 
 
@@ -358,18 +300,12 @@ def streaming_bigram_lm_ingest(
     *,
     text_col: str = "text",
 ):
-    """Continuous LM count maintenance: each micro-batch folds into the
-    shared store exactly-once (batch id = tag slot). Returns a configured
-    DataStreamWriter — call .trigger(...).start(). Read the live LM any
-    time with read_bigram_lm_store; scoring stays a batch concern."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bigram_lm_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, text_col=text_col
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    """Continuous LM count maintenance, one tag slot per micro-batch.
+    Returns a configured DataStreamWriter — call .trigger(...).start().
+    Read the live LM any time with read_bigram_lm_store."""
+    return foreach_batch(
+        stream, checkpoint_dir, bigram_lm_handle_batch,
+        store_dir=store_dir, text_col=text_col,
     )
 
 
@@ -469,13 +405,8 @@ def streaming_perplexity_monitor(
     flood). Returns a configured DataStreamWriter; read the drift series
     with spark.read.parquet(monitor_dir) (batch_id is an inferred
     partition column)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        perplexity_monitor_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, monitor_dir=monitor_dir,
-            id_col=id_col, text_col=text_col, k=k, fold=fold,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch(
+        stream, checkpoint_dir, perplexity_monitor_handle_batch,
+        store_dir=store_dir, monitor_dir=monitor_dir,
+        id_col=id_col, text_col=text_col, k=k, fold=fold,
     )

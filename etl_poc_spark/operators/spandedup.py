@@ -11,6 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    BATCH_ID,
+    DeltaLog,
+    foreach_batch,
+    ingest_and_keep,
+)
+
+SPAN_LOG = DeltaLog(("win_hash",), (("n_docs", "sum"),), BATCH_ID)
+
 
 def span_coverage(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", window: int = 8
@@ -241,9 +250,7 @@ def incremental_span_removal_ingest(
 ) -> DataFrame:
     """Span-dedup a NEW batch against a persisted duplicated-window store
     and fold the batch's window counts into the store — the continuous-
-    crawl counterpart of `span_removal`, completing the incremental
-    family (linededup / near-dup / kmv / badwords all have one; spans
-    didn't). Same output schema as span_removal.
+    crawl counterpart of `span_removal`, with the same output schema.
 
     Store shape: append-only (win_hash, n_docs) rows — one per (batch,
     window-hash), a few dozen bytes per distinct window regardless of
@@ -258,48 +265,26 @@ def incremental_span_removal_ingest(
     window across batches — acceptable: the threshold needs a signal,
     not an exact census (the linededup caveat verbatim).
 
-    `batch_id` (the streaming seam): store rows are written PARTITIONED
-    by batch_id with dynamic partition overwrite, and the history read
-    EXCLUDES the current batch_id — an at-least-once foreachBatch replay
-    overwrites its own partition and never sees its prior attempt as
-    history, so replay is byte-identical.
+    `batch_id` (the streaming seam) files the store rows under the
+    batch_id=<n> slot and excludes it from the history read, so a replay
+    is byte-identical (operators/deltastore.py).
 
     Scale shape: only window hashes and counts persist or shuffle —
     historical span BODIES are never stored; the rebuild tail is shared
     with span_removal (one doc_id window + the text join)."""
-    from pyspark.errors import AnalysisException
-
     w = int(window)
     if w <= 0:
         raise ValueError("window must be positive")
     d = _token_arrays(batch, id_col, text_col)
     wins = _window_hashes(d, id_col, w)
     batch_counts = wins.groupBy("h").agg(F.countDistinct(id_col).alias("n_docs"))
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    try:
-        # compaction-aware read (operators/deltastore.py); slot-level
-        # replay exclusion — a batch_id replay against a loose-append
-        # store raises DeltaStoreModeError instead of silently counting
-        # its own prior attempt as history (ADVICE r15)
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=(
-                f"batch_id={int(batch_id)}" if batch_id is not None else None
-            ),
+    store = SPAN_LOG.history(spark, store_dir, batch_id)
+    if store is not None:
+        hist = SPAN_LOG.fold(store).withColumnsRenamed(
+            {"win_hash": "h", "n_docs": "hist_docs"}
         )
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only — any OTHER analysis failure must surface
-        # (treating a corrupt store as "no history" would silently dedup
-        # against nothing; the linededup rule)
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    if have_store:
-        hist = store.groupBy("win_hash").agg(F.sum("n_docs").alias("hist_docs"))
         total = (
-            batch_counts.join(hist.withColumnRenamed("win_hash", "h"), "h", "left")
+            batch_counts.join(hist, "h", "left")
             .select(
                 "h",
                 (
@@ -317,30 +302,14 @@ def incremental_span_removal_ingest(
     # own rows as history (the linededup lesson)
     out = _rebuild_without_spans(d, flagged, id_col, w).localCheckpoint(eager=True)
     counts_out = batch_counts.withColumnRenamed("h", "win_hash")
-    if batch_id is None:
-        counts_out.write.mode("append").parquet(store_dir)
-    else:
-        (
-            counts_out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
+    SPAN_LOG.write(counts_out, store_dir, batch_id)
     return out
 
 
 def compact_span_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the duplicated-window store's old batch_id slots into one
-    consolidated slot (operators/deltastore.py protocol). SUM(n_docs) by
-    win_hash is the readers' own fold — bit-equal before/after; keep_slots
-    (default 1) protects the in-flight micro-batch's replay exclusion."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["win_hash"], agg=[("n_docs", "sum")], **kwargs,
-    )
+    """Compact the duplicated-window store (operators/deltastore.py);
+    history reads are bit-equal before and after."""
+    return SPAN_LOG.compact(spark, store_dir, **kwargs)
 
 
 def streaming_span_removal_ingest(
@@ -354,27 +323,14 @@ def streaming_span_removal_ingest(
 ):
     """Continuous span dedup: each micro-batch runs
     incremental_span_removal_ingest against the shared window store and
-    appends its rewritten documents to `kept_dir`. Returns a configured
-    DataStreamWriter — call .trigger(...).start() to run. Both side
-    effects are keyed by batch_id with dynamic partition overwrite, so
-    foreachBatch's at-least-once replay composes to effectively-once
-    (the streaming_line_dedup_ingest contract verbatim)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = incremental_span_removal_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id, **ingest_kwargs,
-        )
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    writes its rewritten documents to the batch_id=<n> slot of
+    `kept_dir`. Returns a configured DataStreamWriter — call
+    .trigger(...).start() to run."""
+    return foreach_batch(
+        stream, checkpoint_dir, ingest_and_keep,
+        ingest=incremental_span_removal_ingest, log=SPAN_LOG,
+        store_dir=store_dir, kept_dir=kept_dir,
+        id_col=id_col, text_col=text_col, **ingest_kwargs,
     )
 
 

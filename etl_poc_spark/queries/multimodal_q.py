@@ -38,8 +38,8 @@ from etl_poc_spark.registry import query
 # r15 (r14 verdict ask #5): grown from 16x16/0.05s so the 32-task decode
 # path measures CODEC throughput, not task scheduling — 64x64 = 12,288
 # pixel bytes per image through decode_ppm + luminance_histogram (real
-# per-pixel work), 0.4s = 3,200 PCM frames per clip through decode_wav +
-# audio_stats. Per task at sf0.1 that is ~156 images (~1.9 MB) and ~156
+# per-pixel work), 0.4s = 3,200 PCM frames per clip through wav_stats.
+# Per task at sf0.1 that is ~156 images (~1.9 MB) and ~156
 # clips (~1 MB) of genuine per-byte Python codec work. All four media
 # queries re-pinned at the new fixture size.
 _IMG_W = 64

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import foreach_batch, store_exists
 from etl_poc_spark.operators.sketches import _KMV_HASH_MAX, kmv_hash
 
 _NUMERIC = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
@@ -92,15 +93,12 @@ def incremental_profile_ingest(
     stats, kmv = profile_batch(batch_df, cols, k=k)
     stats_path = f"{store_dir}/stats"
     kmv_path = f"{store_dir}/kmv"
-    try:
-        old_stats = spark.read.parquet(stats_path)
-        old_kmv = spark.read.parquet(kmv_path)
-        have = True
-    except Exception:  # first ingest: store does not exist yet
-        have = False
-    if have:
+    # first ingest only when the store is absent: any failure reading an
+    # existing store must raise, or the overwrite below would replace the
+    # whole history with this one batch
+    if store_exists(spark, stats_path):
         stats = (
-            old_stats.unionByName(stats)
+            spark.read.parquet(stats_path).unionByName(stats)
             .groupBy("column")
             .agg(
                 F.sum("n_rows").alias("n_rows"),
@@ -111,7 +109,7 @@ def incremental_profile_ingest(
                 F.max("max_str").alias("max_str"),
             )
         )
-        kmv = old_kmv.unionByName(kmv)
+        kmv = spark.read.parquet(kmv_path).unionByName(kmv)
     w = Window.partitionBy("column").orderBy("h")
     kmv = (
         kmv.distinct()
@@ -166,6 +164,4 @@ def streaming_profile_ingest(
             batch_df.sparkSession, batch_df, cols, store_dir, k=k
         )
 
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return foreach_batch(stream, checkpoint_dir, handle)

@@ -352,6 +352,61 @@ def test_wav_stereo_downmix(spark):
     assert abs(row.duration_sec - 0.25) < 1e-9
 
 
+def _random_pcm_wav(rng, nch, n):
+    import io
+    import wave
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(nch)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(np.array(
+            [rng.randint(-32768, 32767) for _ in range(n * nch)], dtype="<i2"
+        ).tobytes())
+    return buf.getvalue()
+
+
+def _exact_rms(wav):
+    """sqrt of the exact rational mean square of the channel-averaged
+    samples, rounded once to a double before the sqrt."""
+    import io
+    import wave
+    from fractions import Fraction
+
+    import numpy as np
+
+    with wave.open(io.BytesIO(wav), "rb") as w:
+        nch = w.getnchannels()
+        v = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2").astype(np.int64)
+    sums = [int(x) for x in v.reshape(-1, nch).sum(axis=1)]
+    return float(Fraction(sum(x * x for x in sums), len(sums) * (nch * 32768) ** 2)) ** 0.5
+
+
+def test_wav_three_channel_rms_exact(spark):
+    """3-channel PCM: the channel divisor 3·32768 is not a power of two,
+    so float mono samples are not dyadic; the RMS must still equal the
+    exactly rounded value — directly and through decode_audio_features."""
+    import random
+
+    from etl_poc_spark.multimodal.audiocodec import wav_stats
+    from etl_poc_spark.multimodal.media import decode_audio_features
+
+    rng = random.Random(3)
+    clips = [_random_pcm_wav(rng, 3, rng.randint(50, 400)) for _ in range(20)]
+    for wav in clips:
+        assert wav_stats(wav)[3] == _exact_rms(wav)
+    df = spark.createDataFrame(
+        [(f"c{i}.wav", w) for i, w in enumerate(clips[:3])],
+        "path string, content binary",
+    )
+    rows = sorted(decode_audio_features(df).collect(), key=lambda r: r.path)
+    assert [r.n_channels for r in rows] == [3, 3, 3]
+    assert [r.rms for r in rows] == [_exact_rms(w) for w in clips[:3]]
+
+
 def test_non_wav_fallback_and_strict(spark):
     """mp3-sniffed bytes: deterministic fallback features (decoded=False);
     strict mode raises at the decode seam instead."""

@@ -24,7 +24,12 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
+
+from etl_poc_spark.operators.incremental import NEAR_DUP_LOG
+from etl_poc_spark.operators.linededup import LINE_LOG
+from etl_poc_spark.operators.spandedup import SPAN_LOG
 
 
 def _docs(spark, rows):
@@ -178,3 +183,145 @@ def test_line_dedup_store_same_batch_id_replaces_partition(spark, tmp_path):
         r["seg_hash"]: r["n_docs"] for r in spark.read.parquet(s).collect()
     }
     assert fold(raced) == fold(ref)
+
+
+# ---------------------------------------------------------------------------
+# every DeltaLog family: one slot per replayed id, under its current name
+# ---------------------------------------------------------------------------
+
+_TEXTS = [
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu",
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu",
+    "nu xi omicron pi rho sigma tau upsilon phi chi psi omega badword",
+]
+
+
+def _family_docs(spark):
+    return spark.createDataFrame(
+        [(i + 1, t, f"src{i % 2}", 5 * i - 3) for i, t in enumerate(_TEXTS)],
+        "doc_id long, text string, source string, excess long",
+    )
+
+
+def _ingest_lm(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.ngram_lm import bigram_lm_handle_batch
+
+    bigram_lm_handle_batch(df, k, store_dir=store)
+
+
+def _read_lm(spark, store):
+    from etl_poc_spark.operators.ngram_lm import read_bigram_lm_store
+
+    return [sorted(map(tuple, f.collect())) for f in read_bigram_lm_store(spark, store)]
+
+
+def _ingest_dsir(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.dsir import dsir_handle_batch
+
+    dsir_handle_batch(df, k, store_dir=store, role="raw")
+
+
+def _read_dsir(spark, store):
+    from etl_poc_spark.operators.dsir import read_dsir_store
+
+    return sorted(map(tuple, read_dsir_store(spark, store, "raw").collect()))
+
+
+def _ingest_doremi(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.curation import doremi_handle_batch
+
+    doremi_handle_batch(df, k, store_dir=store)
+
+
+def _read_doremi(spark, store):
+    from etl_poc_spark.operators.curation import read_doremi_store
+
+    return sorted(map(tuple, read_doremi_store(spark, store).collect()))
+
+
+def _ingest_badwords(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.curation import badwords_handle_batch
+
+    badwords_handle_batch(df, k, store_dir=store)
+
+
+def _read_badwords(spark, store):
+    from etl_poc_spark.operators.curation import read_badwords_store
+
+    return sorted(map(tuple, read_badwords_store(spark, store).collect()))
+
+
+def _ingest_exact(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.incremental import exact_dedup_handle_batch
+
+    exact_dedup_handle_batch(
+        df, k, store_dir=store, kept_dir=str(tmp / "kept"), key_cols=["text"]
+    )
+
+
+def _read_exact(spark, store):
+    from etl_poc_spark.operators.incremental import read_exact_dedup_store
+
+    return sorted(map(tuple, read_exact_dedup_store(spark, store).collect()))
+
+
+def _ingest_near(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.incremental import incremental_near_dup_ingest
+
+    incremental_near_dup_ingest(spark, df.select("doc_id", "text"), store, batch_id=k)
+
+
+def _ingest_line(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
+
+    incremental_line_dedup_ingest(
+        spark, df, store, words_per_segment=3, batch_id=k
+    )
+
+
+def _ingest_span(spark, df, store, k, tmp):
+    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
+
+    incremental_span_removal_ingest(spark, df, store, window=4, batch_id=k)
+
+
+def _spec_read(log):
+    return lambda spark, store: sorted(map(tuple, log.read(spark, store).collect()))
+
+
+# (family, ingest(spark, df, store, batch_id, tmp), folded read,
+#  log subdirs, slot name for batch id 7)
+_FAMILIES = [
+    ("ngram_lm", _ingest_lm, _read_lm, ["bigrams", "tokens"], "tag=b7"),
+    ("dsir", _ingest_dsir, _read_dsir, ["raw"], "tag=raw-b7"),
+    ("doremi", _ingest_doremi, _read_doremi, [""], "tag=batch-7"),
+    ("badwords", _ingest_badwords, _read_badwords, [""], "tag=batch-7"),
+    ("exact", _ingest_exact, _read_exact, [""], "tag=b7"),
+    ("near_dup", _ingest_near, _spec_read(NEAR_DUP_LOG), [""], "batch_id=7"),
+    ("line", _ingest_line, _spec_read(LINE_LOG), [""], "batch_id=7"),
+    ("span", _ingest_span, _spec_read(SPAN_LOG), [""], "batch_id=7"),
+]
+
+
+@pytest.mark.parametrize(
+    "ingest,read,logs,slot", [f[1:] for f in _FAMILIES], ids=[f[0] for f in _FAMILIES]
+)
+def test_family_replayed_slot_is_one_slot_and_reads_once(
+    spark, tmp_path, ingest, read, logs, slot
+):
+    """Ingesting the same slot id twice leaves exactly ONE slot directory,
+    named as every earlier store of the family named it (so those stores
+    still replay idempotently), and the folded read equals one ingest."""
+    import os
+
+    df = _family_docs(spark)
+    store = str(tmp_path / "twice")
+    ingest(spark, df, store, 7, tmp_path / "a")
+    ingest(spark, df, store, 7, tmp_path / "a")
+    for sub in logs:
+        log_dir = os.path.join(store, sub)
+        visible = [n for n in os.listdir(log_dir) if not n.startswith(("_", "."))]
+        assert visible == [slot]
+    once = str(tmp_path / "once")
+    ingest(spark, df, once, 7, tmp_path / "b")
+    assert read(spark, store) == read(spark, once)

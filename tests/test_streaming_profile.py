@@ -112,3 +112,32 @@ def test_streaming_profile_equals_sequential(spark, tmp_path):
     assert _profile_dict(read_profile(spark, s_store)) == _profile_dict(
         read_profile(spark, seq_store)
     )
+
+
+def test_corrupt_profile_store_raises_and_keeps_history(spark, tmp_path):
+    """A store that exists but cannot be read is not a first ingest: the
+    next ingest must raise and leave every store file as it was, instead
+    of overwriting 100 rows of history with one 10-row batch."""
+    import os
+
+    from etl_poc_spark.streaming.profile import incremental_profile_ingest
+
+    store = tmp_path / "store"
+    cols = ["id", "v"]
+    first = spark.range(100).select("id", (F.col("id") * 2).alias("v"))
+    incremental_profile_ingest(spark, first, cols, str(store))
+    (part,) = [p for p in (store / "stats").iterdir() if p.name.endswith(".parquet")]
+    part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
+
+    def snapshot():
+        return {
+            os.path.relpath(os.path.join(d, f), store): open(os.path.join(d, f), "rb").read()
+            for d, _, fs in os.walk(store)
+            for f in fs
+        }
+
+    before = snapshot()
+    batch = spark.range(10).select("id", F.col("id").alias("v"))
+    with pytest.raises(Exception):
+        incremental_profile_ingest(spark, batch, cols, str(store))
+    assert snapshot() == before
